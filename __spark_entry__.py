@@ -115,10 +115,8 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     size = _path_bytes(path)
     if size < _SPREAD_FLOOR_BYTES:
         return df
-    try:
-        mpb = int(str(spark.conf.get("spark.sql.files.maxPartitionBytes")).rstrip("b"))
-    except (TypeError, ValueError):
-        mpb = 128 << 20
+    # the session conf parses byte strings ("128m", "1k", "134217728b")
+    mpb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     par = spark.sparkContext.defaultParallelism
     if size // mpb >= par:
         return df

@@ -73,7 +73,7 @@ def main() -> None:
                          "rounds (default 8; 0 disables). The ledger is "
                          "exempt from retention — without compaction a "
                          "long crawl accretes one file set per round and "
-                         "every bloom rebuild/exact repair unions "
+                         "every round's seen anti-join unions "
                          "thousands of tiny files. Row multiset is "
                          "preserved; crawl results are unchanged.")
     args = ap.parse_args()

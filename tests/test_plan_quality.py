@@ -205,6 +205,36 @@ def test_round_parse_fully_jvm(spark, crawl_sf0001):
     assert "regexp_extract_all" in plan
 
 
+def test_seen_check_is_one_exact_anti_join(spark, tmp_path):
+    """The crawl round's default seen check over a catalog-read ledger is
+    one left-anti join: no aggregate over the ledger (a distinct would add
+    a partial/final HashAggregate and an Exchange on every check — the
+    anti-join's result does not depend on repeated ledger keys) and no
+    Python eval."""
+    from xrpl_rich_list_py_crawler_spark.operators.seen import anti_join_seen
+    from xrpl_rich_list_py_crawler_spark.sources.catalog import SnapshotCatalog
+
+    cat = SnapshotCatalog(str(tmp_path))
+    # rounds 1 and 2 overlap on url_hash 0..999: the ledger has repeats
+    for r in (1, 2):
+        ledger = spark.range(r * 1000).select(
+            F.col("id").alias("url_hash"), F.lit(r).alias("round")
+        )
+        cat.commit_round(r, {"seen": ledger})
+    seen = cat.read_appended(spark, "seen")
+    frontier = spark.range(3000).select(
+        F.col("id").alias("url_hash"), F.lit("u").alias("url")
+    )
+    unseen = anti_join_seen(frontier, seen)
+    assert sorted(r["url_hash"] for r in unseen.collect()) == list(
+        range(2000, 3000)
+    )
+    plan = unseen._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in plan
+    assert "HashAggregate" not in plan
+    assert "EvalPython" not in plan
+
+
 def test_connected_components_stays_jvm(spark):
     """CC label propagation must be JVM-only joins/aggs: no Python eval,
     no cartesian product, and the per-round plan is lineage-truncated

@@ -114,12 +114,16 @@ def test_spread_is_noop_for_large_scans(spark, tmp_path):
     # same rows either way
     assert sorted(r.id for r in small.collect()) == list(range(20000))
 
-    # simulate a big table by shrinking the split size below file bytes
+    # simulate a big table by shrinking the split size below file bytes,
+    # given as a plain number and as a unit-suffixed byte string
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
-        big = entry._spread(spark, df, p)
-        assert "Repartition" not in big._jdf.queryExecution().analyzed().toString()
+        for split in ("1", "1k"):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+            big = entry._spread(spark, df, p)
+            assert (
+                "Repartition" not in big._jdf.queryExecution().analyzed().toString()
+            ), split
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 

@@ -1,23 +1,28 @@
-"""URL-seen set: partitioned bloom shards + exact anti-join repair.
+"""URL-seen set: exact ledger anti-join, plus an opt-in bloom pre-filter.
 
 Generalizes the reference's in-memory dedup set ``processed_accounts``
 (``loader.py:140,155``) and the ``UNIQUE (address, snapshot_date)`` key
 (``table.sql:13``) to a 10^10-key seen set (BASELINE.json north_rule):
 
-* **truth**: the exact ``seen`` ledger (url_hash longs, appended per round).
-* **pre-filter**: N bloom shards aligned to ``pmod(url_hash, N)``, each a
-  numpy bitset built executor-side via ``applyInPandas`` (one Arrow batch
-  per shard group, no per-row Python). Candidates whose shard bloom says
-  "definitely unseen" skip the expensive anti-join entirely; only the
-  "maybe seen" minority is repaired with an exact anti-join against the
-  ledger — so bloom false positives can never drop an unseen URL and the
-  final seen set matches the reference exactly (SURVEY.md §4.2-1).
+* **truth and default check**: the exact ``seen`` ledger (url_hash longs,
+  appended per round), checked with one hash left-anti join
+  (:func:`anti_join_seen`). The crawl round uses it for both of its seen
+  checks.
+* **opt-in pre-filter** (``CrawlRun(use_bloom=True)``): N bloom shards
+  aligned to ``pmod(url_hash, N)``, each a numpy bitset built
+  executor-side via ``applyInPandas`` (one Arrow batch per shard group,
+  no per-row Python), probed through a pandas UDF. Rows the bloom calls
+  "definitely unseen" pass; the "maybe seen" rest is repaired with the
+  exact anti-join, so false positives never drop an unseen URL.
 
-At 10^10 keys: ~1.2 GB of bloom bits at 1% fpp split over shards; shards are
-broadcast once per round and probed inside an Arrow batch. The exact ledger
-stays columnar on disk and is only anti-joined against the (tiny) maybe-seen
-slice — this is the operator that turns an O(frontier × seen) shuffle into
-O(maybe_seen × seen_shard).
+Why the exact join is the default: the repair still reads the whole
+ledger as the join's build side, so the bloom saves no ledger work. It
+only adds two Python passes per check and a per-round bloom build that
+competes with the commit writes for cores; dropping it halved the crawl
+benchmark's median round time (CHANGES.md). A bloom pays where the side
+it filters is the expensive one, as in :func:`.curation.ngram_contamination`,
+where it drops most corpus grams before they reach the join against a
+small benchmark set.
 
 A cuckoo-filter variant (supports deletion, for forced re-crawl) lives in
 :mod:`.cuckoo`.
@@ -196,12 +201,15 @@ def build_bloom_shards(
 
 
 def anti_join_seen(candidates: DataFrame, seen: DataFrame | None) -> DataFrame:
-    """Exact frontier-vs-seen anti-join (J2, ``loader.py:157-161``)."""
+    """Exact frontier-vs-seen anti-join (J2, ``loader.py:157-161``).
+
+    The ledger side is not de-duplicated: a left-anti join's result does
+    not depend on repeated right-side keys, and a ``distinct`` would add
+    an aggregate and an exchange over the whole ledger on every check.
+    """
     if seen is None:
         return candidates
-    return candidates.join(
-        seen.select("url_hash").distinct(), "url_hash", "left_anti"
-    )
+    return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
 
 
 def anti_join_seen_bloom(

@@ -5,7 +5,7 @@ The Spark re-expression of the reference's hourly pipeline
 ``validator.py`` politeness; SURVEY.md §3.1):
 
     frontier ──anti-join──▶ unseen ──robots──▶ allowed ──window──▶ selected
-        (bloom+exact)       (broadcast dim)     (token bucket, ≤16/host)
+      (exact, vs ledger)    (broadcast dim)     (token bucket, ≤16/host)
     selected ──join pages──▶ fetched ──Arrow UDF──▶ text+links ──▶
         results (ranked, lineage-stamped)  +  next frontier  +  metrics
         — all committed atomically as one catalog round.
@@ -23,9 +23,16 @@ them in single-process pandas for crawl-order equivalence goldens):
   discovery_ts) per url_hash;
 * discovery_ts of a new link = the parent page's warc_ts (data-derived; no
   wall clock — determinism ban, SURVEY.md §7.4).
+
+Both seen checks (step 1: frontier vs ledger; step 8: merged candidates
+vs ledger ∪ this round's increment) are exact left-anti joins on
+url_hash. ``CrawlRun(use_bloom=True)`` puts a bloom pre-filter in front
+of them: same rows, measured slower (operators/seen.py says why).
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +48,8 @@ from ..operators.frontier import global_rank
 from ..operators.politeness import apply_robots, assign_politeness_gated
 from ..operators.seen import anti_join_seen, anti_join_seen_bloom
 from ..sources.catalog import SnapshotCatalog
+
+_log = logging.getLogger(__name__)
 
 FRONTIER_COLS = [
     "url", "url_hash", "host", "depth", "host_rank", "discovery_ts", "round",
@@ -147,7 +156,7 @@ class CrawlRun:
         catalog: SnapshotCatalog,
         pages: DataFrame,
         robots: DataFrame,
-        use_bloom: bool = True,
+        use_bloom: bool = False,
         job_id: str = "crawl",
         robots_active_only: bool | None = None,
         transport=None,
@@ -202,8 +211,8 @@ class CrawlRun:
         self.pages_idx = index_pages(pages)
         if "url_hash" not in pages.columns:
             self.pages_idx = self.pages_idx.persist()
-        # incremental bloom state: rebuilt from the ledger on (re)start,
-        # OR-updated with each round's seen increment afterwards
+        # incremental bloom state (use_bloom only): rebuilt from the ledger
+        # on (re)start, OR-updated with each round's seen increment after
         self._bloom = None
         self._bloom_round = -1
 
@@ -255,7 +264,10 @@ class CrawlRun:
         frontier = self._frontier(prev)
         seen = self._seen(prev)
 
-        # 1. dedup against the seen set (bloom pre-filter + exact repair)
+        # 1. dedup against the seen ledger (exact left-anti join). Empty on
+        # frontiers this engine commits (step 8 strips everything seen);
+        # kept as the guard for any other frontier — skipping it measured
+        # no gain.
         if self.use_bloom:
             shards = self._bloom_for(prev, seen)
             unseen = anti_join_seen_bloom(self.spark, frontier, seen, shards)
@@ -337,9 +349,10 @@ class CrawlRun:
         )
 
         # 6. seen increment: attempted fetches + robots-denied. Persisted:
-        # four consumers (the seen table write, the increment bloom build,
-        # the step-8 seen_now union, and the clean-slice anti-join) would
-        # otherwise each replay the distinct shuffle (r06).
+        # its consumers (the seen table write and the step-8 seen_now
+        # union; with use_bloom also the increment bloom build and the
+        # clean-slice anti-join) would otherwise each replay the distinct
+        # shuffle (r06).
         new_seen = (
             parsed.select("url_hash")
             .unionByName(denied.select("url_hash"))
@@ -377,10 +390,8 @@ class CrawlRun:
             links = filter_traps(links)
 
         # 8. next frontier = deferred ∪ new links, collapsed per url_hash to
-        #    min (depth, discovery_ts), minus everything now seen. The seen
-        #    check is bloom-first (updated with this round's increment) with
-        #    exact repair — at 10^10 the exact ledger anti-join only ever
-        #    touches the maybe-seen slice.
+        #    min (depth, discovery_ts), minus everything now seen: one exact
+        #    anti-join against ledger ∪ this round's increment.
         candidates = deferred.select(*[c for c in FRONTIER_COLS if c != "round"]).unionByName(
             links.select(*[c for c in FRONTIER_COLS if c != "round"])
         )
@@ -499,10 +510,21 @@ class CrawlRun:
                     n_bits_override=self._bloom.n_bits,
                 )
                 ex.submit(self.catalog.commit_round, round_n, out).result()
-                inc_shards = fut_bloom.result()
-            # commit succeeded → advance the in-memory bloom to this round
-            self._bloom = self._bloom.or_merge(inc_shards)
-            self._bloom_round = round_n
+            err = fut_bloom.exception()
+            if err is None:
+                self._bloom = self._bloom.or_merge(fut_bloom.result())
+                self._bloom_round = round_n
+            else:
+                # the round is durable once commit_round returns, so a
+                # failed increment build must not fail it (a retry would
+                # re-commit a committed round): drop the bloom and let
+                # _bloom_for rebuild it from the ledger next round
+                _log.warning(
+                    "round %d: bloom increment build failed; the bloom is "
+                    "rebuilt from the seen ledger next round",
+                    round_n, exc_info=err,
+                )
+                self._bloom = None
         else:
             self.catalog.commit_round(round_n, out)
         gated.unpersist()
@@ -526,8 +548,8 @@ class CrawlRun:
         ``compact_seen_every=k`` runs the catalog's small-files maintenance
         on the seen ledger every k rounds: the ledger is append-only and
         exempt from retention (it IS the dedup key), so over a long crawl
-        its round count grows without bound and each round's bloom rebuild /
-        exact repair would otherwise union thousands of tiny files.
+        its round count grows without bound and each round's seen check
+        would otherwise union thousands of tiny files.
         Compaction preserves the row multiset (tests pin crawl-result
         equivalence), so crawl behavior is unchanged.
         """
