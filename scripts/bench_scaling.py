@@ -218,13 +218,12 @@ crawl speedup {crawl_ratio:.2f}x.
 ## Why this scales on a real 4N-executor cluster
 
 - fetch+dedup: one shuffle keyed by url_hash; the seen check is one exact
-  left-anti join of 8-byte keys against the ledger (no row data ever
+  left-anti join against the ledger's 8-byte keys (no row data ever
   reaches the driver).
 - parse: per-partition Arrow batches, zero shuffle before the final
   map-side-combined aggregate; Python worker pools are per-executor.
 - crawl rounds: shuffles keyed by host (salted) and url_hash; robots dim
-  broadcast; no driver-side loops over data (the opt-in bloom collects
-  only O(n_shards) blobs per round).
+  broadcast; no driver-side loops over data.
 """
     with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
         f.write(md)

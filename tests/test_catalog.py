@@ -21,16 +21,11 @@ def test_uncommitted_round_invisible(spark, tmp_path):
     assert cat.last_round() == 1
 
 
-def _crawl_inputs(spark, crawl_sf0001):
-    return tuple(
-        spark.read.parquet(os.path.join(crawl_sf0001, f"{t}.parquet"))
-        for t in ("pages", "robots", "seeds")
-    )
-
-
 def test_resume_equals_uninterrupted(spark, crawl_sf0001, tmp_path):
     """Kill after round 1, resume → identical final state (FIXTURES.md §7.5)."""
-    pages, robots, seeds = _crawl_inputs(spark, crawl_sf0001)
+    pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
+    robots = spark.read.parquet(os.path.join(crawl_sf0001, "robots.parquet"))
+    seeds = spark.read.parquet(os.path.join(crawl_sf0001, "seeds.parquet"))
 
     cat_a = SnapshotCatalog(str(tmp_path / "a"))
     CrawlRun(spark, cat_a, pages, robots).run(2, seeds)
@@ -61,54 +56,6 @@ def test_resume_equals_uninterrupted(spark, crawl_sf0001, tmp_path):
     fa = {tuple(r) for r in cat_a.read_state(spark, "frontier").collect()}
     fb = {tuple(r) for r in cat_b.read_state(spark, "frontier").collect()}
     assert fa == fb
-
-
-def test_bloom_increment_failure_after_commit_keeps_round(
-    spark, crawl_sf0001, tmp_path, monkeypatch
-):
-    """use_bloom=True: the increment bloom builds alongside the commit
-    writes. If it fails after commit_round made the round durable, the
-    round must still return (a retrying caller would otherwise re-commit
-    a committed round); the bloom is rebuilt from the ledger next round
-    and the crawl equals an uninterrupted one (ADVICE r06)."""
-    from xrpl_rich_list_py_crawler_spark.operators import seen as seen_mod
-
-    pages, robots, seeds = _crawl_inputs(spark, crawl_sf0001)
-    cat_a = SnapshotCatalog(str(tmp_path / "a"))
-    CrawlRun(spark, cat_a, pages, robots).run(2, seeds)
-
-    build = seen_mod.build_bloom_shards
-    calls = []
-
-    def failing_increment(seen, *a, **kw):
-        increment = kw.get("n_bits_override") is not None
-        calls.append(increment)
-        if increment:
-            raise RuntimeError("injected bloom increment failure")
-        return build(seen, *a, **kw)
-
-    monkeypatch.setattr(seen_mod, "build_bloom_shards", failing_increment)
-    cat_b = SnapshotCatalog(str(tmp_path / "b"))
-    run = CrawlRun(spark, cat_b, pages, robots, use_bloom=True)
-    run.bootstrap(seeds)
-    run.run_round(1)
-    assert cat_b.manifest()["committed_rounds"] == [0, 1]
-    run.run_round(2)
-    assert cat_b.manifest()["committed_rounds"] == [0, 1, 2]
-    # full build, failed increment; then a rebuild from the ledger
-    assert calls == [False, True, False, True]
-
-    res = [
-        [tuple(r) for r in cat.read_round(spark, "results", 2)
-         .orderBy("rank").select("url", "rank", "fetch_ok").collect()]
-        for cat in (cat_a, cat_b)
-    ]
-    assert res[0] == res[1]
-    seen = [
-        {r["url_hash"] for r in cat.read_round(spark, "seen", 2).collect()}
-        for cat in (cat_a, cat_b)
-    ]
-    assert seen[0] == seen[1]
 
 
 def test_fresh_run_without_seeds_raises(spark, tmp_path):

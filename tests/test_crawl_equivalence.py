@@ -29,61 +29,53 @@ def sim_logs(crawl_sf0001):
 
 
 @pytest.fixture(scope="module")
-def spark_runs(spark, crawl_sf0001, tmp_path_factory):
-    """The same crawl once per seen-check path, keyed by ``use_bloom``:
-    the exact ledger anti-join (default) and the opt-in bloom
-    pre-filter. Every test below holds for both catalogs."""
+def spark_run(spark, crawl_sf0001, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("catalog"))
+    cat = SnapshotCatalog(root)
     pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
     robots = spark.read.parquet(os.path.join(crawl_sf0001, "robots.parquet"))
     seeds = spark.read.parquet(os.path.join(crawl_sf0001, "seeds.parquet"))
-    runs = {}
-    for use_bloom in (False, True):
-        cat = SnapshotCatalog(str(tmp_path_factory.mktemp("catalog")))
-        CrawlRun(spark, cat, pages, robots, use_bloom=use_bloom).run(
-            N_ROUNDS, seeds
+    CrawlRun(spark, cat, pages, robots).run(N_ROUNDS, seeds)
+    return cat
+
+
+def test_crawl_order_matches_simulator(spark, sim_logs, spark_run):
+    _, logs = sim_logs
+    for log in logs:
+        res = (
+            spark_run.read_round(spark, "results", log.round_n)
+            .orderBy("rank")
+            .select("url", "rank", "fetch_ok")
+            .collect()
         )
-        runs[use_bloom] = cat
-    return runs
+        assert [r["url"] for r in res] == log.fetched_urls
+        assert [r["fetch_ok"] for r in res] == log.fetch_ok
+        # rank is a permutation 1..N (loader.py:189 invariant)
+        assert [r["rank"] for r in res] == list(range(1, len(res) + 1))
 
 
-def test_crawl_order_matches_simulator(spark, sim_logs, spark_runs):
-    _, logs = sim_logs
-    for use_bloom, cat in spark_runs.items():
-        for log in logs:
-            res = (
-                cat.read_round(spark, "results", log.round_n)
-                .orderBy("rank")
-                .select("url", "rank", "fetch_ok")
-                .collect()
-            )
-            assert [r["url"] for r in res] == log.fetched_urls, use_bloom
-            assert [r["fetch_ok"] for r in res] == log.fetch_ok, use_bloom
-            # rank is a permutation 1..N (loader.py:189 invariant)
-            assert [r["rank"] for r in res] == list(range(1, len(res) + 1))
-
-
-def test_final_seen_set_matches_simulator(spark, sim_logs, spark_runs):
+def test_final_seen_set_matches_simulator(spark, sim_logs, spark_run):
     sim, _ = sim_logs
-    for use_bloom, cat in spark_runs.items():
-        seen = {r["url_hash"] for r in cat.read_appended(spark, "seen").collect()}
-        assert seen == sim.seen, use_bloom
+    seen = {
+        r["url_hash"] for r in spark_run.read_appended(spark, "seen").collect()
+    }
+    assert seen == sim.seen
 
 
-def test_extracted_text_byte_identical(spark, sim_logs, spark_runs):
+def test_extracted_text_byte_identical(spark, sim_logs, spark_run):
     _, logs = sim_logs
-    for use_bloom, cat in spark_runs.items():
-        for log in logs:
-            res = (
-                cat.read_round(spark, "results", log.round_n)
-                .filter("fetch_ok")
-                .select("url", "text")
-                .collect()
-            )
-            for r in res:
-                assert r["text"] == log.texts[r["url"]], use_bloom
+    for log in logs:
+        res = (
+            spark_run.read_round(spark, "results", log.round_n)
+            .filter("fetch_ok")
+            .select("url", "text")
+            .collect()
+        )
+        for r in res:
+            assert r["text"] == log.texts[r["url"]]
 
 
-def test_crawl_order_matches_goldens(spark, spark_runs):
+def test_crawl_order_matches_goldens(spark, spark_run):
     """Committed goldens (generated by scripts/gen_goldens.py from the
     simulator) pin the behavior across refactors."""
     import json
@@ -94,49 +86,47 @@ def test_crawl_order_matches_goldens(spark, spark_runs):
         if not os.path.exists(gpath):
             pytest.skip("goldens not generated yet")
         want = [json.loads(l)["url"] for l in open(gpath)]
-        for use_bloom, cat in spark_runs.items():
-            res = (
-                cat.read_round(spark, "results", rn)
-                .orderBy("rank")
-                .select("url")
-                .collect()
-            )
-            assert [r["url"] for r in res] == want, use_bloom
-
-
-def test_metrics_consistency(spark, spark_runs):
-    """fetched + fetch_missing = attempted; attempted + deferred + denied +
-    dups = candidates (per round, summed over hosts)."""
-    for use_bloom, cat in spark_runs.items():
-        agg = (
-            cat.read_appended(spark, "metrics")
-            .groupBy("round")
-            .agg(
-                F.sum("candidates").alias("cand"),
-                F.sum("seen_dups").alias("dups"),
-                F.sum("robots_denied").alias("denied"),
-                F.sum("budget_deferred").alias("deferred"),
-                F.sum("fetched").alias("ok"),
-                F.sum("fetch_missing").alias("miss"),
-                # the ingest-side dup counter (the reference's
-                # UNIQUE-conflict analog)
-                F.sum("links_seen_dropped").alias("dropped"),
-            )
+        res = (
+            spark_run.read_round(spark, "results", rn)
+            .orderBy("rank")
+            .select("url")
             .collect()
         )
-        for r in agg:
-            assert (
-                r["cand"]
-                == r["dups"] + r["denied"] + r["deferred"] + r["ok"] + r["miss"]
-            ), use_bloom
-        # links_seen_dropped is non-negative every round, and the fixture
-        # link graph re-links crawled pages, so the crawl must observe drops
-        assert all(r["dropped"] >= 0 for r in agg), use_bloom
-        assert sum(r["dropped"] for r in agg) > 0, use_bloom
+        assert [r["url"] for r in res] == want
+
+
+def test_metrics_consistency(spark, spark_run):
+    """fetched + fetch_missing = attempted; attempted + deferred + denied +
+    dups = candidates (per round, summed over hosts)."""
+    m = spark_run.read_appended(spark, "metrics")
+    agg = (
+        m.groupBy("round")
+        .agg(
+            F.sum("candidates").alias("cand"),
+            F.sum("seen_dups").alias("dups"),
+            F.sum("robots_denied").alias("denied"),
+            F.sum("budget_deferred").alias("deferred"),
+            F.sum("fetched").alias("ok"),
+            F.sum("fetch_missing").alias("miss"),
+        )
+        .collect()
+    )
+    for r in agg:
+        assert r["cand"] == r["dups"] + r["denied"] + r["deferred"] + r["ok"] + r["miss"]
+    # the ingest-side dup counter (links_seen_dropped, the reference's
+    # UNIQUE-conflict analog): non-negative every round, and the fixture
+    # link graph re-links crawled pages, so the crawl must observe drops
+    d = (
+        m.groupBy("round")
+        .agg(F.sum("links_seen_dropped").alias("dropped"))
+        .collect()
+    )
+    assert all(r["dropped"] >= 0 for r in d)
+    assert sum(r["dropped"] for r in d) > 0
 
 
 def test_respect_nofollow_equivalent_on_directive_free_corpus(
-    spark, crawl_sf0001, spark_runs, tmp_path_factory
+    spark, crawl_sf0001, spark_run, tmp_path_factory
 ):
     """The fixture corpus carries no rel=nofollow / meta-robots
     directives and only href-first anchors, so the REP-directive-aware
@@ -150,7 +140,7 @@ def test_respect_nofollow_equivalent_on_directive_free_corpus(
     CrawlRun(spark, cat, pages, robots, respect_nofollow=True).run(
         N_ROUNDS, seeds
     )
-    base = spark_runs[False].read_appended(spark, "results")
+    base = spark_run.read_appended(spark, "results")
     gated = cat.read_appended(spark, "results")
     cols = ["round", "url", "n_links"]
     assert sorted(map(tuple, base.select(*cols).collect())) == sorted(

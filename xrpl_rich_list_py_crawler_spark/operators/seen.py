@@ -1,28 +1,27 @@
-"""URL-seen set: exact ledger anti-join, plus an opt-in bloom pre-filter.
+"""URL-seen set: exact ledger anti-join, plus bloom-shard primitives.
 
 Generalizes the reference's in-memory dedup set ``processed_accounts``
 (``loader.py:140,155``) and the ``UNIQUE (address, snapshot_date)`` key
 (``table.sql:13``) to a 10^10-key seen set (BASELINE.json north_rule):
 
-* **truth and default check**: the exact ``seen`` ledger (url_hash longs,
+* **truth and crawl check**: the exact ``seen`` ledger (url_hash longs,
   appended per round), checked with one hash left-anti join
   (:func:`anti_join_seen`). The crawl round uses it for both of its seen
   checks.
-* **opt-in pre-filter** (``CrawlRun(use_bloom=True)``): N bloom shards
-  aligned to ``pmod(url_hash, N)``, each a numpy bitset built
-  executor-side via ``applyInPandas`` (one Arrow batch per shard group,
-  no per-row Python), probed through a pandas UDF. Rows the bloom calls
-  "definitely unseen" pass; the "maybe seen" rest is repaired with the
-  exact anti-join, so false positives never drop an unseen URL.
+* **bloom shards**: N bloom shards aligned to ``pmod(url_hash, N)``, each
+  a numpy bitset built executor-side via ``applyInPandas`` (one Arrow
+  batch per shard group, no per-row Python). :func:`anti_join_seen_bloom`
+  probes them through a pandas UDF and repairs the "maybe seen" rows
+  with the exact anti-join, so false positives never drop an unseen URL.
 
-Why the exact join is the default: the repair still reads the whole
-ledger as the join's build side, so the bloom saves no ledger work. It
-only adds two Python passes per check and a per-round bloom build that
-competes with the commit writes for cores; dropping it halved the crawl
-benchmark's median round time (CHANGES.md). A bloom pays where the side
-it filters is the expensive one, as in :func:`.curation.ngram_contamination`,
-where it drops most corpus grams before they reach the join against a
-small benchmark set.
+Why the crawl does not put the bloom in front of its seen checks: the
+repair still reads the whole ledger as the join's build side, so the
+bloom saves no ledger work. It only adds two Python passes per check and
+a per-round bloom build that competes with the commit writes for cores;
+dropping it halved the crawl benchmark's median round time (CHANGES.md).
+A bloom pays where the side it filters is the expensive one, as in
+:func:`.curation.ngram_contamination`, where it drops most corpus grams
+before they reach the join against a small benchmark set.
 
 A cuckoo-filter variant (supports deletion, for forced re-crawl) lives in
 :mod:`.cuckoo`.

@@ -26,13 +26,10 @@ them in single-process pandas for crawl-order equivalence goldens):
 
 Both seen checks (step 1: frontier vs ledger; step 8: merged candidates
 vs ledger ∪ this round's increment) are exact left-anti joins on
-url_hash. ``CrawlRun(use_bloom=True)`` puts a bloom pre-filter in front
-of them: same rows, measured slower (operators/seen.py says why).
+url_hash; operators/seen.py says why no bloom pre-filter sits in front.
 """
 
 from __future__ import annotations
-
-import logging
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,10 +43,10 @@ from ..functions.udfs import (
 )
 from ..operators.frontier import global_rank
 from ..operators.politeness import apply_robots, assign_politeness_gated
-from ..operators.seen import anti_join_seen, anti_join_seen_bloom
+from ..operators.seen import anti_join_seen
+# not called here: perfbench/spans.py patches this name on the module
+from ..operators.seen import anti_join_seen_bloom  # noqa: F401
 from ..sources.catalog import SnapshotCatalog
-
-_log = logging.getLogger(__name__)
 
 FRONTIER_COLS = [
     "url", "url_hash", "host", "depth", "host_rank", "discovery_ts", "round",
@@ -156,7 +153,6 @@ class CrawlRun:
         catalog: SnapshotCatalog,
         pages: DataFrame,
         robots: DataFrame,
-        use_bloom: bool = False,
         job_id: str = "crawl",
         robots_active_only: bool | None = None,
         transport=None,
@@ -167,7 +163,6 @@ class CrawlRun:
         self.spark = spark
         self.catalog = catalog
         self.robots = robots
-        self.use_bloom = use_bloom
         self.job_id = job_id
         # optional live-fetch transport (sources/http_fetch.py): when set,
         # step 3 fetches through host-partitioned mapInPandas instead of
@@ -211,10 +206,6 @@ class CrawlRun:
         self.pages_idx = index_pages(pages)
         if "url_hash" not in pages.columns:
             self.pages_idx = self.pages_idx.persist()
-        # incremental bloom state (use_bloom only): rebuilt from the ledger
-        # on (re)start, OR-updated with each round's seen increment after
-        self._bloom = None
-        self._bloom_round = -1
 
     # -- state accessors -----------------------------------------------------
 
@@ -230,31 +221,6 @@ class CrawlRun:
     def _seen(self, up_to: int) -> DataFrame | None:
         return self.catalog.read_appended(self.spark, "seen", up_to)
 
-    def _bloom_for(self, up_to_round: int, seen: DataFrame | None):
-        """Bloom shards covering rounds ≤ up_to_round — incremental when the
-        in-memory state is current, full rebuild from the ledger otherwise
-        (fresh process / resume / saturation)."""
-        from ..operators.seen import build_bloom_shards
-
-        if (
-            self._bloom is None
-            or self._bloom_round != up_to_round
-            or self._bloom.saturated
-        ):
-            if seen is None:
-                self._bloom = None
-            else:
-                self._bloom = build_bloom_shards(
-                    seen, expected_keys=max(self._expected_keys(), 1)
-                )
-            self._bloom_round = up_to_round
-        return self._bloom
-
-    def _expected_keys(self) -> int:
-        """Sizing hint: 4× current ledger (rebuilds stay rare as the crawl
-        grows)."""
-        return (self._bloom.n_keys * 4) if self._bloom else (1 << 16)
-
     # -- one round -----------------------------------------------------------
 
     def run_round(self, round_n: int) -> dict[str, DataFrame]:
@@ -268,11 +234,7 @@ class CrawlRun:
         # frontiers this engine commits (step 8 strips everything seen);
         # kept as the guard for any other frontier — skipping it measured
         # no gain.
-        if self.use_bloom:
-            shards = self._bloom_for(prev, seen)
-            unseen = anti_join_seen_bloom(self.spark, frontier, seen, shards)
-        else:
-            unseen = anti_join_seen(frontier, seen)
+        unseen = anti_join_seen(frontier, seen)
 
         # 2. robots gate (broadcast dim) + politeness token bucket (window).
         # ``gated`` feeds denied/selected/deferred/results/metrics — persist
@@ -350,9 +312,7 @@ class CrawlRun:
 
         # 6. seen increment: attempted fetches + robots-denied. Persisted:
         # its consumers (the seen table write and the step-8 seen_now
-        # union; with use_bloom also the increment bloom build and the
-        # clean-slice anti-join) would otherwise each replay the distinct
-        # shuffle (r06).
+        # union) would otherwise each replay the distinct shuffle (r06).
         new_seen = (
             parsed.select("url_hash")
             .unionByName(denied.select("url_hash"))
@@ -411,26 +371,7 @@ class CrawlRun:
                     self.spark.createDataFrame([], "url_hash long")).unionByName(
             new_seen.select("url_hash")
         )
-        if self.use_bloom and self._bloom is not None:
-            # r06: prefilter with the PREVIOUS rounds' bloom (this round's
-            # increment is NOT in it), then repair exactly: rows the old
-            # bloom cannot clear get the full seen_now anti-join as
-            # before, and rows it does clear — definitely unseen in prior
-            # rounds — still get an exact anti-join against new_seen (the
-            # per-round increment, politeness-budget-bounded, so AQE
-            # broadcasts it). Result set is identical to prefiltering
-            # with the OR-merged bloom (both compute merged − seen_now),
-            # but the increment shards no longer need to exist before
-            # commit — their build is overlapped with the commit writes
-            # below instead of serializing ~2s/round in front of them.
-            unseen_merged = anti_join_seen(
-                anti_join_seen_bloom(
-                    self.spark, merged, seen_now, self._bloom
-                ),
-                new_seen,
-            )
-        else:
-            unseen_merged = anti_join_seen(merged, seen_now)
+        unseen_merged = anti_join_seen(merged, seen_now)
         next_frontier = unseen_merged.select(
             "url", "url_hash", "host", "depth", "host_rank", "discovery_ts",
             F.lit(round_n).alias("round"),
@@ -487,46 +428,7 @@ class CrawlRun:
             "seen": new_seen,
             "frontier": next_frontier,
         }
-        if self.use_bloom and self._bloom is not None:
-            # increment shards are built executor-side with the SAME
-            # geometry, then OR-merged blob-wise: only n_shards bitsets
-            # reach the driver — never row data (a round's increment is
-            # per-host-budget × host-count, which at 10^10-frontier scale
-            # is millions of longs; collecting it would OOM the driver).
-            # r06: the build runs CONCURRENTLY with the commit writes
-            # (independent jobs over the persisted new_seen — the same
-            # fair-scheduling overlap commit_round already uses), hiding
-            # its ~2s/round behind the slowest table write.
-            from concurrent.futures import ThreadPoolExecutor
-
-            from ..operators.seen import build_bloom_shards
-
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_bloom = ex.submit(
-                    build_bloom_shards,
-                    new_seen,
-                    n_shards=self._bloom.n_shards,
-                    n_hashes=self._bloom.n_hashes,
-                    n_bits_override=self._bloom.n_bits,
-                )
-                ex.submit(self.catalog.commit_round, round_n, out).result()
-            err = fut_bloom.exception()
-            if err is None:
-                self._bloom = self._bloom.or_merge(fut_bloom.result())
-                self._bloom_round = round_n
-            else:
-                # the round is durable once commit_round returns, so a
-                # failed increment build must not fail it (a retry would
-                # re-commit a committed round): drop the bloom and let
-                # _bloom_for rebuild it from the ledger next round
-                _log.warning(
-                    "round %d: bloom increment build failed; the bloom is "
-                    "rebuilt from the seen ledger next round",
-                    round_n, exc_info=err,
-                )
-                self._bloom = None
-        else:
-            self.catalog.commit_round(round_n, out)
+        self.catalog.commit_round(round_n, out)
         gated.unpersist()
         parsed.unpersist()
         next_frontier.unpersist()
