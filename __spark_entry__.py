@@ -136,13 +136,9 @@ def _crawl_sf(sf_dir: str) -> str:
     return base if base.startswith("sf") else "sf0.01"
 
 
-def _fix(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
-) -> DataFrame:
+def _fix(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     d = ensure_crawl_fixtures(_crawl_sf(sf_dir))
-    p = os.path.join(d, f"{name}.parquet")
-    df = spark.read.parquet(p)
-    return _spread(spark, df, p) if spread else df
+    return spark.read.parquet(os.path.join(d, f"{name}.parquet"))
 
 
 def _fix_shared(spark: SparkSession, name: str) -> DataFrame:

@@ -1,7 +1,8 @@
 """Parser layer: byte-identical goldens + oracle agreement.
 
 Pins the input_hint invariant ("byte-identical extracted text per url"):
-pure-Python twin == Arrow UDF == pages.text golden column.
+pure-Python twin == JVM column (extract_text_col) == pages.text golden
+column, on the whole sf0.001 corpus plus adversarial bytes.
 """
 
 import os
@@ -15,9 +16,9 @@ from xrpl_rich_list_py_crawler_spark.functions import (
     canonical_label,
     canonicalize_url,
     canonicalize_url_udf,
-    extract_links_udf,
+    extract_links_col,
     extract_text,
-    extract_text_udf,
+    extract_text_col,
     format_label,
     parse_percentage,
     parse_xrp_amount,
@@ -28,6 +29,7 @@ from xrpl_rich_list_py_crawler_spark.functions.parsers_ref import (
 )
 from xrpl_rich_list_py_crawler_spark.functions.udfs import (
     canonical_label_col,
+    extract_follow_links_col,
     format_label_col,
     parse_percentage_udf,
     parse_xrp_amount_udf,
@@ -42,53 +44,74 @@ def test_extract_text_byte_identical_ref(crawl_sf0001):
 
 
 def test_extract_text_byte_identical_udf(spark, crawl_sf0001):
+    """The crawl's JVM text column over the Spark-read corpus equals the
+    stored pages.text golden on every page (the Arrow UDF this test once
+    covered is gone; the JVM column is the only engine extractor)."""
     pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
-    mism = pages.withColumn("got", extract_text_udf("html")).filter(
-        F.col("got") != F.col("text")
+    mism = pages.withColumn("got", extract_text_col(F.col("html"))).filter(
+        ~F.col("got").eqNullSafe(F.col("text"))
     )
     assert mism.count() == 0
 
 
 def test_extract_links_udf_matches_ref(spark, crawl_sf0001):
-    pages = pd.read_parquet(os.path.join(crawl_sf0001, "pages.parquet")).head(200)
-    sdf = spark.createDataFrame(pages[["url", "html"]])
-    got = {
-        r["url"]: r["links"]
-        for r in sdf.withColumn("links", extract_links_udf("html")).collect()
-    }
-    for r in pages.itertuples(index=False):
-        assert got[r.url] == extract_links(bytes(r.html))
+    """Both JVM link columns a round can run — plain, and the
+    respect_nofollow variant — equal parsers_ref.extract_links on the
+    Spark-read corpus, whose pages carry no rel/meta-robots directives."""
+    pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
+    got = pages.select(
+        "url",
+        "html",
+        extract_links_col(F.col("html")).alias("plain"),
+        extract_follow_links_col(F.col("html")).alias("follow"),
+    ).collect()
+    assert len(got) == 1000
+    for r in got:
+        want = extract_links(bytes(r["html"]))
+        assert list(r["plain"]) == want, r["url"]
+        assert list(r["follow"]) == want, r["url"]
 
 
 def test_extract_page_udf_fused_equals_singles(spark, crawl_sf0001):
-    """The fused one-Arrow-pass extractor (run_round's hot path since r3)
-    must be byte-identical to the single-purpose UDFs AND evaluate its
-    Python UDF exactly once despite two struct-field references."""
-    from xrpl_rich_list_py_crawler_spark.functions import extract_page_udf
-
+    """The round's parse computes text and links in one projection over
+    the html; it must equal the single-purpose JVM columns, read the
+    corpus once, and map a missing page (null html, a fetch 404) to null
+    text and an empty link list."""
     pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
-    fused = (
-        pages.withColumn("_ex", extract_page_udf("html"))
-        .select(
-            "url",
-            F.col("_ex.text").alias("ft"),
-            F.col("_ex.links").alias("fl"),
-        )
+    fetched = pages.select("url", "html").unionByName(
+        spark.createDataFrame([("missing", None)], "url string, html binary")
+    )
+    # the extraction projection of CrawlRun.run_round (step 4)
+    ok = F.col("html").isNotNull()
+    fused = fetched.select(
+        "url",
+        F.when(ok, extract_text_col(F.col("html"))).alias("ft"),
+        F.coalesce(
+            F.when(ok, extract_links_col(F.col("html"))),
+            F.array().cast("array<string>"),
+        ).alias("fl"),
     )
     plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert plan.count("extract_page_udf") == 1
-    singles = pages.select(
+    assert plan.count("FileScan") == 1
+    assert "EvalPython" not in plan
+    singles = fetched.select(
         "url",
-        extract_text_udf("html").alias("st"),
-        extract_links_udf("html").alias("sl"),
+        extract_text_col(F.col("html")).alias("st"),
+        extract_links_col(F.col("html")).alias("sl"),
     )
     mism = (
         fused.join(singles, "url")
-        .filter((F.col("ft") != F.col("st")) | (F.col("fl") != F.col("sl")))
+        .filter(
+            ~F.col("ft").eqNullSafe(F.col("st"))
+            | ~F.col("fl").eqNullSafe(F.coalesce(
+                F.col("sl"), F.array().cast("array<string>")
+            ))
+        )
         .count()
     )
     assert mism == 0
+    (missing,) = fused.filter("url = 'missing'").collect()
+    assert missing["ft"] is None and missing["fl"] == []
 
 
 def test_extract_links_col_jvm_matches_ref(spark, crawl_sf0001):
@@ -96,8 +119,6 @@ def test_extract_links_col_jvm_matches_ref(spark, crawl_sf0001):
     must equal the Python twin on the whole fixture corpus AND on
     adversarial bytes: tab/newline in the tag, multibyte UTF-8 inside an
     href, invalid bytes inside AND outside hrefs, empty href."""
-    from xrpl_rich_list_py_crawler_spark.functions.udfs import extract_links_col
-
     pages = pd.read_parquet(os.path.join(crawl_sf0001, "pages.parquet"))
     adversarial = [
         b'<a href="x">\xff\xfe<p>ok</p><a\thref="q/r">',
@@ -109,7 +130,7 @@ def test_extract_links_col_jvm_matches_ref(spark, crawl_sf0001):
         b"no links at all",
         b"",
     ]
-    rows = [(str(i), bytes(h)) for i, h in enumerate(pages["html"].head(200))]
+    rows = [(str(i), bytes(h)) for i, h in enumerate(pages["html"])]
     rows += [(f"adv{i}", b) for i, b in enumerate(adversarial)]
     sdf = spark.createDataFrame(rows, "k string, html binary")
     got = {
@@ -133,8 +154,6 @@ def test_extract_text_col_jvm_matches_ref(spark, crawl_sf0001):
     search-first + empty-vs-absent semantics), multiline paras, invalid
     UTF-8 inside and outside parts, truncated multibyte at a part
     boundary, unclosed tags, uppercase tags (must NOT match)."""
-    from xrpl_rich_list_py_crawler_spark.functions.udfs import extract_text_col
-
     pages = pd.read_parquet(os.path.join(crawl_sf0001, "pages.parquet"))
     adversarial = [
         b"", b"<title></title>", b"<title>t</title><p>a</p><p>b</p>",
@@ -144,7 +163,7 @@ def test_extract_text_col_jvm_matches_ref(spark, crawl_sf0001):
         b"<p>unclosed", b"<TITLE>up</TITLE><P>up</P>", b"<p></p>",
         b"<p>a</p>\xc3<p>b</p>", b"<title>broken\xe2\x82</title>",
     ]
-    rows = [(str(i), bytes(h)) for i, h in enumerate(pages["html"].head(200))]
+    rows = [(str(i), bytes(h)) for i, h in enumerate(pages["html"])]
     rows += [(f"adv{i}", b) for i, b in enumerate(adversarial)]
     sdf = spark.createDataFrame(rows, "k string, html binary")
     got = {

@@ -150,28 +150,29 @@ def test_trustline_rank_is_two_phase(spark, sf_dir):
 
 
 def test_round_parse_single_arrow_eval(spark, crawl_sf0001):
-    """Round-3 fusion: the crawl's extraction stage must ship the html blob
-    across JVM<->Python ONCE — exactly one ArrowEvalPython with one UDF in
-    the fused parse plan (two would mean the blob pays IPC twice)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from xrpl_rich_list_py_crawler_spark.functions.udfs import extract_page_udf
+    """The crawl's extraction stage ships the html blob across
+    JVM<->Python zero times (the r3 plan had exactly one fused
+    ArrowEvalPython; r04 moved both harvests into the JVM) and keeps the
+    parse narrow: one scan of the blob, no exchange, so the html never
+    rides a shuffle before the round drops it."""
+    from xrpl_rich_list_py_crawler_spark.functions.udfs import (
+        extract_links_col,
+        extract_text_col,
+    )
 
     pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
-    parsed = (
-        pages.withColumn("_ex", F.when(F.col("html").isNotNull(),
-                                       extract_page_udf("html")))
-        .select(F.col("_ex.text").alias("text"),
-                F.size(F.coalesce(F.col("_ex.links"),
-                                  F.array().cast("array<string>"))).alias("n"))
+    ok = F.col("html").isNotNull()
+    parsed = pages.select(
+        F.when(ok, extract_text_col(F.col("html"))).alias("text"),
+        F.size(F.coalesce(F.when(ok, extract_links_col(F.col("html"))),
+                          F.array().cast("array<string>"))).alias("n"),
     )
     # executedPlan string lists each node once (explain-formatted repeats
     # nodes in the details section)
     plan = parsed._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert plan.count("extract_page_udf") == 1
+    assert plan.count("ArrowEvalPython") == 0
+    assert plan.count("FileScan") == 1
+    assert "Exchange" not in plan
 
 
 def test_round_parse_fully_jvm(spark, crawl_sf0001):

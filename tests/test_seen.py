@@ -1,9 +1,11 @@
 """Bloom-sharded seen set: pre-filter + exact repair ≡ naive anti-join."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from xrpl_rich_list_py_crawler_spark.operators.seen import (
+    BITS_PER_KEY,
+    MIN_BITS,
+    N_HASHES,
     anti_join_seen,
     anti_join_seen_bloom,
     build_bloom_shards,
@@ -64,28 +66,22 @@ def test_empty_seen_passthrough(spark):
 
 
 def test_or_merge_executor_side_increment(spark):
-    """Incremental path: base shards OR-merged with increment shards built
-    at the SAME geometry ≡ shards built from the full ledger (no row data
-    ever collected — only n_shards blobs)."""
-    seen, cand, _ = _dfs(spark, n_seen=4000, n_cand=1, overlap=0)
+    """A grown ledger (base + one round's increment) gets a fresh
+    executor-side build rather than an OR-merged increment: the driver
+    collects at most n_shards bitset blobs, every ledger key is
+    (maybe-)contained, and the geometry follows the module constants."""
+    seen, _, _ = _dfs(spark, n_seen=4000, n_cand=1, overlap=0)
     inc, _, _ = _dfs(spark, n_seen=1500, n_cand=1, overlap=0)
-    base = build_bloom_shards(seen, n_shards=8, expected_keys=8000)
-    inc_shards = build_bloom_shards(
-        inc, n_shards=8, n_bits_override=base.n_bits
-    )
-    merged = base.or_merge(inc_shards)
     full = seen.unionByName(inc)
-    # every key of the full ledger must be (maybe-)contained after the merge
+    shards = build_bloom_shards(full, n_shards=8)
     all_hashes = np.array(
         [r["url_hash"] for r in full.select("url_hash").collect()],
         dtype=np.int64,
     )
-    assert merged.maybe_contains(all_hashes).all()
-    assert merged.n_keys == 5500
-    # geometry mismatch is an error, not silent corruption
-    other = build_bloom_shards(inc, n_shards=8, n_bits_override=base.n_bits * 2)
-    try:
-        base.or_merge(other)
-        raise AssertionError("expected ValueError on geometry mismatch")
-    except ValueError:
-        pass
+    assert shards.maybe_contains(all_hashes).all()
+    assert shards.n_keys == 5500
+    assert 0 < len(shards.shards) <= 8
+    assert shards.n_hashes == N_HASHES
+    # power of two, at least MIN_BITS and BITS_PER_KEY bits per key
+    assert shards.n_bits & (shards.n_bits - 1) == 0
+    assert shards.n_bits >= max(MIN_BITS, BITS_PER_KEY * 5500 // 8)

@@ -2564,7 +2564,7 @@ def _py_aes_pick(rows, k, seed):
 
     keyed = []
     for i, s, w in rows:
-        if w <= 0:
+        if w <= 0 or math.isnan(w):
             continue
         h = int(hashlib.md5(f"{i}:{seed}".encode()).hexdigest()[:8], 16)
         u = (h + 1.0) / 2**32
@@ -2580,7 +2580,7 @@ def _py_aes_pick(rows, k, seed):
 
 def test_weighted_sample_matches_python_twin(spark):
     """The selected set equals a row-at-a-time A-ES reference, survives
-    repartitioning, excludes non-positive weights, and tops up."""
+    repartitioning, excludes non-positive and NaN weights, and tops up."""
     from xrpl_rich_list_py_crawler_spark.operators.curation import (
         weighted_sample,
     )
@@ -2609,6 +2609,18 @@ def test_weighted_sample_matches_python_twin(spark):
         for r in bigger.filter("rn <= 15").collect()
     }
     assert prefix == got
+    # double weights with NaN: Spark orders NaN above every double, so a
+    # bare `w > 0` keeps them and their NaN keys sort first under desc
+    drows = [
+        (i, f"L{i % 3}", float("nan") if i % 7 == 0 else (i % 11) - 1.5)
+        for i in range(200)
+    ]
+    ddf = spark.createDataFrame(drows, "doc_id: long, lang: string, w: double")
+    dout = weighted_sample(ddf, k=10, weight_col="w",
+                           strata_col="lang", seed=7)
+    assert {(r["lang"], r["doc_id"]) for r in dout.collect()} == _py_aes_pick(
+        drows, 10, 7
+    )
 
 
 def test_weighted_sample_weights_bias_selection(spark):

@@ -16,14 +16,10 @@ from .udfs import (  # noqa: F401
     canonicalize_url_udf,
     canonicalize_urls_split,
     extract_links_col,
-    extract_links_udf,
-    extract_page_udf,
     extract_text_col,
-    extract_text_udf,
     format_label_col,
     host_col,
     parse_percentage_udf,
     parse_xrp_amount_udf,
     safe_ratio_col,
-    url_host_udf,
 )

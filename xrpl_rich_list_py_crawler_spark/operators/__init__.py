@@ -1,6 +1,6 @@
 """Reusable dataflow operators (SURVEY.md §2 mappings + §4.2 custom ops)."""
 
-from .asof import asof_lookup, banded_asof_lookup, latest_per_key  # noqa: F401
+from .asof import latest_per_key  # noqa: F401
 from .curation import (  # noqa: F401
     boilerplate_clean,
     cap_per_key,
@@ -14,7 +14,6 @@ from .curation import (  # noqa: F401
 from .frontier import (  # noqa: F401
     filter_traps,
     global_rank,
-    priority_order,
     recrawl_schedule,
     salted_repartition,
     snapshot_diff,
@@ -27,7 +26,7 @@ from .graph import (  # noqa: F401
 )
 from .packing import global_cumsum, pack_sequences  # noqa: F401
 from .sessions import session_stats, sessionize  # noqa: F401
-from .politeness import apply_robots, assign_politeness, parse_robots_txt  # noqa: F401
+from .politeness import apply_robots, parse_robots_txt  # noqa: F401
 from .similarity import (  # noqa: F401
     brute_force_topk,
     cosine_near_dup_pairs,

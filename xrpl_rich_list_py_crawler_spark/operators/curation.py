@@ -1331,8 +1331,10 @@ def weighted_sample(
     inputs, the emitted key is rounded to 9, and a last-ulp rank flip
     would need two keys within 1e-15 of each other (u is cryptographic:
     that is a measure-zero tie, and the id tiebreak pins exact ties).
-    Rows with weight <= 0 are excluded up front — A-ES keys are
-    undefined there, and silently keeping them would over-sample.
+    Rows with weight <= 0 or NaN are excluded up front — A-ES keys are
+    undefined there, and silently keeping them would over-sample (a NaN
+    weight passes ``w > 0`` because Spark orders NaN above every double,
+    and its NaN key then sorts first under ``desc``).
 
     Scale shape: when ``strata_col`` is given the ranking window is
     PARTITIONED BY the stratum (one stratum-keyed shuffle, parallel
@@ -1358,7 +1360,7 @@ def weighted_sample(
     ) / F.lit(float(2**32))
     w = F.col(weight_col).cast("double")
     aes = F.log(u) / w
-    pos = df.filter(w > 0).withColumn("_aes", aes)
+    pos = df.filter((w > 0) & ~F.isnan(w)).withColumn("_aes", aes)
     if strata_col is not None:
         win = Window.partitionBy(strata_col).orderBy(
             F.col("_aes").desc(), F.col(id_col).asc()

@@ -11,6 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.udfs import host_col
+
+
 def order_cols() -> list:
     """Global frontier priority (north_rule): (depth, host_rank desc,
     discovery_ts, url_hash) — url_hash makes the order total, so crawl order
@@ -26,11 +29,6 @@ def order_cols() -> list:
         F.col("discovery_ts").asc(),
         F.col("url_hash").asc(),
     ]
-
-
-def priority_order(df: DataFrame) -> DataFrame:
-    """Globally ordered frontier view (for presentation / small outputs)."""
-    return df.orderBy(*order_cols())
 
 
 def salted_repartition(df: DataFrame, n_partitions: int, salt_buckets: int = 16) -> DataFrame:
@@ -310,11 +308,7 @@ def url_path_templates(
     is_explosive = n_urls >= min_urls).
     """
     url = F.col(url_col)
-    host = F.regexp_replace(
-        F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]+)", 1),
-        r":\d+$",
-        "",
-    )
+    host = host_col(url)
     pq = F.regexp_replace(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/]*", "")
     path = F.split_part(pq, F.lit("?"), F.lit(1))
     tmpl = F.regexp_replace(

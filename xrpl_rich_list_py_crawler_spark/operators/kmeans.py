@@ -82,17 +82,6 @@ def quantize_col(vec, scale: int = DEFAULT_SCALE):
     )
 
 
-def _dist2_col(qvec, centroid: list[int]):
-    """Squared L2 distance (long) between a quantized vector column and
-    one integer centroid literal — sequential fold, all integral."""
-    lit = F.array(*[F.lit(int(c)).cast("long") for c in centroid])
-    return F.aggregate(
-        F.zip_with(qvec, lit, lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def assign_cells_col(qvec, centroids: list[list[int]]):
     """(cell, dist2) struct column: argmin over centroid literals with
     lowest-index tiebreak (``array_position`` finds the first min).

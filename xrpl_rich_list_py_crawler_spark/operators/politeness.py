@@ -12,21 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Deterministic intra-host priority (BASELINE.json north_rule frontier
-#: order). ``url_hash`` is the total-order tie-break that makes crawl order
-#: a pure function of data, never of partitioning (SURVEY.md §7.4).
-PRIORITY_COLS = ("depth", "host_rank_desc", "discovery_ts", "url_hash")
-
-
-def priority_cols(df: DataFrame) -> list:
-    return [
-        F.col("depth").asc(),
-        F.col("host_rank").desc(),
-        F.col("discovery_ts").asc(),
-        F.col("url_hash").asc(),
-    ]
-
-
 #: robots.txt grammar (RE2/Java-portable: explicit whitespace classes —
 #: NO ``\s`` (engines disagree on U+000B), no lookahead (RE2 has none),
 #: inline (?i) for the case-insensitive directive names)
@@ -300,8 +285,9 @@ def apply_robots(
     )
 
 
-def assign_politeness(allowed: DataFrame) -> DataFrame:
-    """Token-bucket slot assignment within each host (T8 as window math).
+def assign_politeness_gated(gated: DataFrame) -> DataFrame:
+    """Token-bucket slot assignment within each host (T8 as window math),
+    over the *gated* frame (robots_denied rows kept).
 
     Adds:
       * ``host_slot``     — 1-based fetch position within the host this
@@ -309,37 +295,18 @@ def assign_politeness(allowed: DataFrame) -> DataFrame:
       * ``selected``      — slot ≤ per-host budget (reference batch_size=16,
                             ``validator.py:123``); unselected rows are
                             *deferred*, not dropped — they stay in the
-                            frontier for the next round;
+                            frontier for the next round. False for denied
+                            rows;
       * ``fetch_delay_s`` — (slot-1) × crawl_delay: the deterministic stand-in
                             for ``asyncio.sleep`` pacing
                             (``validator.py:181-182``).
 
-    One shuffle on ``host``; the window sort is the only per-host work.
-    """
-    w = Window.partitionBy("host").orderBy(
-        F.col("depth").asc(),
-        F.col("discovery_ts").asc(),
-        F.col("url_hash").asc(),
-    )
-    slot = F.row_number().over(w)
-    return (
-        allowed.withColumn("host_slot", slot)
-        .withColumn("selected", F.col("host_slot") <= F.col("max_fetches_per_round"))
-        .withColumn(
-            "fetch_delay_s",
-            (F.col("host_slot") - 1).cast("double") * F.col("crawl_delay_s"),
-        )
-    )
-
-
-def assign_politeness_gated(gated: DataFrame) -> DataFrame:
-    """assign_politeness over the *gated* frame (robots_denied rows kept).
-
     Denied rows sort last within their host, so allowed rows receive the
-    identical 1..n slots assign_politeness would give them — but the whole
-    round state lives in ONE frame that can be persisted once and sliced
-    into denied/selected/deferred without recomputing the anti-join+window
-    chain per consumer. ``selected`` is False for denied rows.
+    slots 1..n as if the denied rows were absent — but the whole round
+    state lives in ONE frame that can be persisted once and sliced into
+    denied/selected/deferred without recomputing the anti-join+window
+    chain per consumer. One shuffle on ``host``; the window sort is the
+    only per-host work.
     """
     w = Window.partitionBy("host").orderBy(
         F.col("robots_denied").asc(),

@@ -23,8 +23,9 @@ A bloom pays where the side it filters is the expensive one, as in
 :func:`.curation.ngram_contamination`, where it drops most corpus grams
 before they reach the join against a small benchmark set.
 
-A cuckoo-filter variant (supports deletion, for forced re-crawl) lives in
-:mod:`.cuckoo`.
+Nothing deletes from the seen set: a forced re-crawl bootstraps the due
+URLs of :func:`..plans.rounds.revisit_seeds` on a fresh catalog, so
+neither structure needs deletion support.
 """
 
 from __future__ import annotations
@@ -38,6 +39,12 @@ from pyspark.sql import functions as F
 
 # Mixing constant for the second hash in double-hashing (splitmix64 step).
 _MIX = np.uint64(0x9E3779B97F4A7C15)
+
+# Bloom geometry of build_bloom_shards: ~0.8% false positives at
+# 10 bits/key with 7 probes; a shard never drops below 2 KiB of bits.
+BITS_PER_KEY = 10
+N_HASHES = 7
+MIN_BITS = 1 << 14
 
 
 def _positions(hashes: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
@@ -70,62 +77,6 @@ class BloomShards:
 
     n_keys: int = 0
 
-    def with_added(self, hashes: np.ndarray) -> "BloomShards":
-        """Return a new bundle with ``hashes`` OR-ed in (incremental round
-        update — avoids rebuilding from the full ledger every round; at
-        cluster scale this is a per-shard executor-side OR-merge)."""
-        h = hashes.astype(np.int64)
-        shard_ids = np.mod(h, self.n_shards)
-        shards = dict(self.shards)
-        for sid in np.unique(shard_ids):
-            bits = np.frombuffer(
-                shards.get(int(sid), bytes(self.n_bits // 8)), dtype=np.uint8
-            ).copy()
-            pos = _positions(h[shard_ids == sid], self.n_bits, self.n_hashes)
-            _set_bits(bits, pos)
-            shards[int(sid)] = bits.tobytes()
-        return BloomShards(
-            n_shards=self.n_shards,
-            n_bits=self.n_bits,
-            n_hashes=self.n_hashes,
-            shards=shards,
-            n_keys=self.n_keys + len(h),
-        )
-
-    def or_merge(self, other: "BloomShards") -> "BloomShards":
-        """Blob-wise OR of two same-geometry bundles.
-
-        The scale path for per-round updates: the increment's shards are
-        built executor-side (``build_bloom_shards`` with this bundle's
-        geometry), so only ``n_shards`` bitset blobs ever reach the driver —
-        never row data (round-1's ``new_seen.collect()`` was unbounded at a
-        10^10-key frontier; VERDICT.md What's-wrong #2)."""
-        if (self.n_shards, self.n_bits, self.n_hashes) != (
-            other.n_shards, other.n_bits, other.n_hashes,
-        ):
-            raise ValueError("or_merge requires identical bloom geometry")
-        shards = dict(self.shards)
-        for sid, blob in other.shards.items():
-            if sid in shards:
-                a = np.frombuffer(shards[sid], dtype=np.uint8)
-                b = np.frombuffer(blob, dtype=np.uint8)
-                shards[sid] = np.bitwise_or(a, b).tobytes()
-            else:
-                shards[sid] = blob
-        return BloomShards(
-            n_shards=self.n_shards,
-            n_bits=self.n_bits,
-            n_hashes=self.n_hashes,
-            shards=shards,
-            n_keys=self.n_keys + other.n_keys,
-        )
-
-    @property
-    def saturated(self) -> bool:
-        """True when keys exceed the sizing budget (~10 bits/key) — callers
-        should rebuild larger to keep the false-positive rate low."""
-        return self.n_keys * 10 > self.n_bits * self.n_shards
-
     def maybe_contains(self, hashes: np.ndarray) -> np.ndarray:
         """Vectorized membership: False ⇒ definitely unseen."""
         out = np.zeros(len(hashes), dtype=bool)
@@ -144,37 +95,22 @@ class BloomShards:
         return out
 
 
-def build_bloom_shards(
-    seen: DataFrame,
-    n_shards: int = 32,
-    bits_per_key: int = 10,
-    n_hashes: int = 7,
-    min_bits: int = 1 << 14,
-    expected_keys: int | None = None,
-    n_bits_override: int | None = None,
-) -> BloomShards:
+def build_bloom_shards(seen: DataFrame, n_shards: int = 32) -> BloomShards:
     """Build per-shard blooms executor-side, collect only the bitsets.
 
     ``applyInPandas`` over ``pmod(url_hash, n_shards)`` groups: each task
     sees one shard's hashes as a single Arrow batch and emits one (shard_id,
     bitset) row — the shuffle moves longs, the collect moves n_shards blobs.
-
-    ``n_bits_override`` pins the geometry (for building an increment bundle
-    that will be :meth:`BloomShards.or_merge`-d into an existing one); in
-    that mode no sizing ``count()`` job runs — key counts ride back on the
-    per-shard rows instead (one Spark job per increment, not two).
+    Each shard gets ``BITS_PER_KEY`` bits per key (at least ``MIN_BITS``,
+    rounded up to a power of two) and ``N_HASHES`` probes.
     """
-    if n_bits_override is not None:
-        n_bits = n_bits_override
-    else:
-        total = seen.count()
-        sized_for = max(total, expected_keys or 0)
-        n_bits = max(min_bits, int(bits_per_key * max(sized_for, 1) / n_shards))
-        n_bits = 1 << int(np.ceil(np.log2(n_bits)))  # power of two → cheap mod
+    total = seen.count()
+    n_bits = max(MIN_BITS, int(BITS_PER_KEY * max(total, 1) / n_shards))
+    n_bits = 1 << int(np.ceil(np.log2(n_bits)))  # power of two → cheap mod
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         bits = np.zeros(n_bits // 8, dtype=np.uint8)
-        pos = _positions(pdf["url_hash"].to_numpy(), n_bits, n_hashes)
+        pos = _positions(pdf["url_hash"].to_numpy(), n_bits, N_HASHES)
         _set_bits(bits, pos)
         return pd.DataFrame(
             {
@@ -193,7 +129,7 @@ def build_bloom_shards(
     return BloomShards(
         n_shards=n_shards,
         n_bits=n_bits,
-        n_hashes=n_hashes,
+        n_hashes=N_HASHES,
         shards={r["shard"]: bytes(r["bits"]) for r in built},
         n_keys=sum(r["n"] for r in built),
     )

@@ -6,7 +6,7 @@ The Spark re-expression of the reference's hourly pipeline
 
     frontier ──anti-join──▶ unseen ──robots──▶ allowed ──window──▶ selected
       (exact, vs ledger)    (broadcast dim)     (token bucket, ≤16/host)
-    selected ──join pages──▶ fetched ──Arrow UDF──▶ text+links ──▶
+    selected ──join pages──▶ fetched ──JVM regex──▶ text+links ──▶
         results (ranked, lineage-stamped)  +  next frontier  +  metrics
         — all committed atomically as one catalog round.
 
